@@ -6839,7 +6839,7 @@ WITH bodies AS (
 p AS (
   SELECT host,
          greatest(coalesce(try_cast(regexp_extract(body,
-           '(?i)crawl-delay:\s*([0-9]+)', 1) AS BIGINT), 1), 1)
+           '(?i)crawl-delay:\\s*([0-9]+)', 1) AS BIGINT), 1), 1)
            AS crawl_delay_s
   FROM bodies
 )

@@ -14,7 +14,8 @@ fingerprint + dedup over ~n_pages heavy pages — dominates wall time:
 the quantity whose scaling the criterion is about. Per-round driver
 overhead (plan building, commit bookkeeping) is a sandbox constant that
 a real multi-executor deployment pays once per micro-batch regardless
-of cluster size; light_metrics keeps it minimal.
+of cluster size; the round's metrics row adds no job to it (its counts
+ride on the round's own writes).
 """
 
 from __future__ import annotations
@@ -42,7 +43,6 @@ def bench_config(
         n_salts=8,
         n_partitions=n_partitions,
         n_bloom_segments=32,
-        light_metrics=True,
         # caller picks by workload weight: light-body small-batch rounds
         # flip codegen off (per-round Janino compile tax beats
         # interpreted eval there); heavy-body rounds keep it ON — see

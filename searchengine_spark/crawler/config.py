@@ -36,9 +36,10 @@ class CrawlConfig:
     # (per-task scheduling is the round's fixed cost — measured: the
     # 64k-page/light-body 32-core leg ran 8% faster at 8 partitions
     # than 32); a giant steady-state round keeps full width. Uses the
-    # arithmetically-carried queued count (an upper bound on the batch)
-    # so sizing costs no extra action; rounds without a carried count
-    # (first after init/resume) use full n_partitions. The heavy fetch/
+    # QUEUED count carried from the previous round (an upper bound on
+    # the batch) so sizing costs no extra action (a resume reads it from the
+    # metrics commit manifest); rounds without a carried count (the
+    # first after init) use full n_partitions. The heavy fetch/
     # extract stage is unaffected — it inherits the corpus's full-width
     # co-partitioning, not the batch's. 0 disables (always full width).
     rows_per_partition_target: int = 4096
@@ -136,45 +137,25 @@ class CrawlConfig:
     # like the persist() path.
     leaf_plans_in_round: bool = True
 
-    # ---- async hot-intermediate prefetch (default ON): as each hot
-    # intermediate is checkpointed/persisted, a count() is submitted on
-    # a worker thread so EXECUTORS materialize it while the DRIVER is
-    # still building the downstream plans — overlapping the round's two
-    # serial components (Catalyst plan construction vs cluster work)
-    # instead of paying them back-to-back. Downstream jobs reuse the
-    # already-persisted blocks (block-manager locking single-computes
-    # under concurrency), so no work is duplicated; the only cost is
-    # one near-free count job per intermediate (AQE is off in-round, so
-    # a count is a single driver round-trip).
-    prefetch_in_round: bool = True
-
-    # ---- batch the prefetch submissions (default ON): queue every
-    # hot-intermediate count during plan building and submit them all
-    # at once when planning finishes, instead of submitting inside
-    # _hot(). On a wide cluster the giant rounds' concurrent prefetch
-    # jobs peg every core, CPU-starving the driver's own Catalyst
-    # analysis (measured: the plan-building marks inflate ~10x in the
-    # giant round when submissions interleave with planning); deferring
-    # the submissions keeps planning on a quiet JVM and the executors
-    # then materialize the same chain at full width. Only consulted
-    # when prefetch_in_round is on.
-    batch_prefetch: bool = True
-
-    # ---- giant-round prefetch cutoff: when the carried QUEUED count
-    # exceeds this, the round skips prefetch submissions entirely. The
-    # prefetch's value is filling idle executors while the driver
-    # plans; on an executor-bound giant round (the 10^10-frontier
-    # steady state) there is no idle to fill — the extra jobs race the
-    # frontier write for the same lazy localCheckpoints and
-    # double-compute them (measured at 64k pages / 32 cores: 70 s/round
-    # without prefetch vs 82 s batched / 105 s interleaved with it).
-    # Small driver-bound rounds (the ramp, the 2k-page bench) keep the
-    # overlap win. None = never skip.
+    # ---- hot-intermediate prefetch, one rule: as each hot intermediate
+    # is checkpointed/persisted, a count is submitted on a worker thread
+    # at once, so EXECUTORS materialize it while the DRIVER is still
+    # building the downstream plans (J7, the candidate chain) —
+    # overlapping the round's two serial components instead of paying
+    # them back-to-back. Downstream jobs reuse the materialized blocks
+    # (block-manager locking single-computes under concurrency), so no
+    # work is duplicated; the cost is one near-free count job per
+    # intermediate. Measured on 4 cores (7 reps each, giant and
+    # steady-state rounds): deferring the submissions until planning
+    # ends, or not prefetching at all, were both slower than this.
+    # The one exception: when the carried QUEUED count exceeds
+    # prefetch_max_queued the round skips prefetch. On an
+    # executor-bound giant round (the 10^10-frontier steady state)
+    # there is no idle to fill — the extra jobs race the frontier write
+    # for the same lazy localCheckpoints and double-compute them
+    # (measured at 64k pages / 32 cores: 70 s/round without prefetch vs
+    # 105 s with it). None = never skip.
     prefetch_max_queued: int | None = 16384
-
-    # ---- per-round metrics: full (counts per stage) or light (only the
-    # queued-remaining count needed for loop control) — the bench path
-    light_metrics: bool = False
 
     # ---- dedup gates
     ngram_threshold: float = 0.65  # J7 (reference ngrams.py:11)

@@ -26,6 +26,9 @@ worker cycle README.md:196-203 lifted to set semantics):
   7. commit: frontier flips + new QUEUED rows, url_seen append, bloom
      segments, fingerprints, extracted text, metrics — one atomic
      snapshot per round (ST4: resume = read latest committed round).
+     The metrics row is counted by Observations on the frontier and
+     fingerprint writes (no job of its own), and its commit manifest
+     carries the QUEUED count that sizes the first round of a resume.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from searchengine_spark.crawler import gates
@@ -213,6 +216,15 @@ def run_round(
     """Execute one frontier round; returns the number of QUEUED urls
     remaining after the round (0 ⇒ crawl complete, ST1 termination).
 
+    prev_queued is the QUEUED count before the round (what the previous
+    round returned; None when unknown). It sizes the round's partition
+    width and decides the giant-round prefetch cutoff — both
+    performance only, never results. Each hot intermediate's prefetch
+    is submitted as soon as it is built, so executors work while the
+    driver plans the rest of the round. The metrics row costs no job:
+    its counts come from Observations on the frontier and fingerprint
+    writes, and it is staged as a literal one-row projection.
+
     Runs with AQE per cfg.aqe_in_round (default OFF for the round loop):
     every AQE exchange materialization is a separate driver-scheduled
     job, and a round has ~15 shuffles across ~7 concurrent actions —
@@ -295,12 +307,6 @@ def _run_round_body(
     _round_caches: list,
     _stage_pool,
 ) -> int:
-    """prev_queued (when the caller carries it between rounds) lets the
-    light-metrics path derive the new QUEUED count arithmetically —
-    queued' = queued − |batch| + |new| holds exactly because every batch
-    row leaves QUEUED and every admitted row enters it — from two counts
-    over already-materialized cached DataFrames, instead of re-scanning
-    the frontier."""
     profile = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
     _t = [time.perf_counter()]
 
@@ -319,50 +325,36 @@ def _run_round_body(
     if cfg.leaf_plans_in_round:
         _quiet_unpersist_warning(spark)
 
-    _pending_prefetch: list = []
     # giant-round cutoff (cfg.prefetch_max_queued): executor-bound
     # rounds skip prefetch — nothing is idle during planning, and the
     # extra jobs double-compute the lazy checkpoints against the
     # frontier write
-    _do_prefetch = cfg.prefetch_in_round and (
+    _do_prefetch = (
         cfg.prefetch_max_queued is None
         or prev_queued is None
         or prev_queued <= cfg.prefetch_max_queued
     )
-
-    def _submit_prefetch(action) -> None:
-        # cfg.batch_prefetch: queue during planning, flush after — the
-        # giant rounds' concurrent prefetch jobs otherwise CPU-starve
-        # the driver's own Catalyst analysis on a saturated box
-        if cfg.batch_prefetch:
-            _pending_prefetch.append(action)
-        else:
-            _stage_pool.submit(action)
-
-    def _flush_prefetch() -> None:
-        for action in _pending_prefetch:
-            _stage_pool.submit(action)
-        _pending_prefetch.clear()
 
     def _hot(df: DataFrame, warm: bool = False) -> DataFrame:
         if not cfg.leaf_plans_in_round:
             df = df.persist()
             _round_caches.append((df, None))
             if warm and _do_prefetch:
-                _submit_prefetch(df.count)
+                _stage_pool.submit(df.count)
             return df
         out = df.localCheckpoint(eager=False)
         jrdd = out._jdf.queryExecution().analyzed().rdd()
         _round_caches.append((out, jrdd))
-        # async prefetch (cfg.prefetch_in_round): executors materialize
-        # this intermediate while the driver keeps building plans; a
-        # failure here is ignored — the frontier write recomputes the
-        # same lineage and surfaces the real error. The action is a raw
-        # RDD count on the leaf (NOT Dataset.count): no throwaway SQL
-        # plan, one stage, and no orphaned SQLMetrics accumulators for
-        # late task-end events to trip over after the Dataset is GC'd.
+        # async prefetch, submitted as soon as the intermediate exists:
+        # executors materialize it while the driver keeps building the
+        # downstream plans (J7, the candidate chain). A failure here is
+        # ignored — the frontier write recomputes the same lineage and
+        # surfaces the real error. The action is a raw RDD count on the
+        # leaf (NOT Dataset.count): no throwaway SQL plan, one stage,
+        # and no orphaned SQLMetrics accumulators for late task-end
+        # events to trip over after the Dataset is GC'd.
         if warm and _do_prefetch:
-            _submit_prefetch(jrdd.count)
+            _stage_pool.submit(jrdd.count)
         return out
 
     # batch-proportional partition width for the round's light
@@ -570,7 +562,6 @@ def _run_round_body(
     # append-mode snapshots: each round writes only its DELTA (Iceberg
     # append-files shape — a round is O(new rows), never O(table))
     _mark("plans")
-    _flush_prefetch()  # planning done — executors get the queued chain
     if profile:
         batch.count()
         _mark("mat:batch")
@@ -592,8 +583,27 @@ def _run_round_body(
     # before any delta ACTION runs (delta jobs re-read the caches this
     # write materializes; running them earlier would double-compute the
     # round lineage).
+    # The round's metrics ride on the writes it already does: an
+    # Observation on the frontier write counts the batch, its FETCHED
+    # rows, the admitted urls and the QUEUED rows left (round_added /
+    # round_fetched == round_no pick out this round's rows — earlier
+    # rows carry smaller round numbers), and one on the fingerprint
+    # write counts the non-dup pages. No extra job.
+    fetched_now = F.col("round_fetched") == round_no
+    obs_frontier = Observation()
     fut_frontier = _stage_pool.submit(
-        io.stage, "frontier", frontier_next, round_no,
+        io.stage,
+        "frontier",
+        frontier_next.observe(
+            obs_frontier,
+            F.count(F.when(fetched_now, 1)).alias("batch_size"),
+            F.count(F.when(fetched_now & (F.col("status") == "FETCHED"), 1))
+            .alias("fetched_ok"),
+            F.count(F.when(F.col("round_added") == round_no, 1)).alias("new_urls"),
+            F.count(F.when(F.col("status") == "QUEUED", 1))
+            .alias("queued_remaining"),
+        ),
+        round_no,
         n_files=cfg.n_partitions,
     )
     # The four delta snapshots only re-read those hot caches — they are
@@ -622,8 +632,11 @@ def _run_round_body(
         )
 
     seen_delta = _seen_projection(new_urls, round_no)
-    fp_delta = fpdf.join(dup_keys, "url_hash", "left_anti").select(
-        "url_hash", "canon_url", "fp", F.lit(round_no).alias("round_added")
+    obs_fp = Observation()
+    fp_delta = (
+        fpdf.join(dup_keys, "url_hash", "left_anti")
+        .select("url_hash", "canon_url", "fp", F.lit(round_no).alias("round_added"))
+        .observe(obs_fp, F.count(F.lit(1)).alias("fp_rows"))
     )
     ex_delta = page_stage.join(dup_keys, "url_hash", "left_anti").select(
         "url_hash", "canon_url", "text", F.lit(round_no).alias("round_fetched")
@@ -744,82 +757,53 @@ def _run_round_body(
         )
         _mark("stage:trap_templates")
 
-    def _stage_metrics(row_df: DataFrame) -> None:
-        if do_compact:  # metrics history squashes with the other deltas
-            prev = io.read("metrics", round_no - 1)
-            io.stage(
-                "metrics", prev.unionByName(row_df), round_no,
-                mode="append", base=True,
-            )
-        else:
-            io.stage("metrics", row_df, round_no, mode="append")
-
-    def _commit_and_prune() -> None:
-        io.commit_round(round_no)
-        if do_compact:  # reclaim superseded snapshots (post-commit, safe)
-            tables = ["url_seen", "fingerprints", "extracted", "bloom", "metrics"]
-            if hg_delta is not None:
-                tables.append("host_graph")
-            for t in tables:
-                io.prune_compacted(t)
-
-    if cfg.light_metrics:
-        # bench path: loop-control count only, metrics row minimal
-        if prev_queued is not None:
-            # exact identity over cached/tiny tables (see docstring)
-            queued_remaining = prev_queued - batch.count() + new_urls.count()
-        else:  # first round after init/resume: direct count
-            queued_remaining = frontier_next.filter(
-                F.col("status") == "QUEUED"
-            ).count()
-        _stage_metrics(
-            spark.createDataFrame(
-                [(round_no, None, None, None, None, None, None, queued_remaining)],
-                METRICS_SCHEMA,
-            )
-        )
-        _commit_and_prune()
-        _mark("metrics+commit")
-        return queued_remaining
-
-    # single-job metrics: one action over the persisted round DataFrames
-    # (crossJoin of four 1-row aggregates) instead of four count() jobs
-    counts = (
-        batch.agg(F.count("*").alias("batch_size"))
-        .crossJoin(page_stage.agg(F.count("*").alias("fetched_ok")))
-        .crossJoin(
-            flagged.agg(
-                F.coalesce(F.sum(F.col("is_dup").cast("long")), F.lit(0)).alias(
-                    "dup_pages"
-                )
-            )
-        )
-        .crossJoin(new_urls.agg(F.count("*").alias("n_new")))
-        .crossJoin(
-            frontier_next.agg(
-                F.sum((F.col("status") == "QUEUED").cast("long")).alias(
-                    "queued_remaining"
-                )
-            )
-        )
-        .collect()[0]
-    )
-    batch_size, fetched_ok = counts["batch_size"], counts["fetched_ok"]
+    # Observation.get blocks until its action's metrics arrive, and
+    # forever if the action failed — read only after both writes'
+    # futures returned (above)
+    counts = obs_frontier.get
+    fetched_ok = counts["fetched_ok"]
     queued_remaining = counts["queued_remaining"]
-    _stage_metrics(
-        spark.createDataFrame(
-            [
-                (
-                    round_no, batch_size, fetched_ok, batch_size - fetched_ok,
-                    counts["dup_pages"], None, counts["n_new"], queued_remaining,
-                )
-            ],
-            METRICS_SCHEMA,
-        )
+    row = _metrics_row(
+        spark,
+        round=round_no,
+        batch_size=counts["batch_size"],
+        fetched_ok=fetched_ok,
+        errors=counts["batch_size"] - fetched_ok,
+        dup_pages=fetched_ok - obs_fp.get["fp_rows"],
+        new_urls=counts["new_urls"],
+        queued_remaining=queued_remaining,
     )
-    _commit_and_prune()
+    # the manifest carries the QUEUED count to a resumed crawl (sizing
+    # for its first round — see crawl)
+    carry = {"round": round_no, "queued_remaining": queued_remaining}
+    if do_compact:  # metrics history squashes with the other deltas
+        io.stage(
+            "metrics", io.read("metrics", round_no - 1).unionByName(row),
+            round_no, mode="append", base=True, props=carry,
+        )
+    else:
+        io.stage("metrics", row, round_no, mode="append", props=carry)
+    io.commit_round(round_no)
+    if do_compact:  # reclaim superseded snapshots (post-commit, safe)
+        tables = ["url_seen", "fingerprints", "extracted", "bloom", "metrics"]
+        if hg_delta is not None:
+            tables.append("host_graph")
+        for t in tables:
+            io.prune_compacted(t)
     _mark("metrics+commit")
     return queued_remaining
+
+
+def _metrics_row(spark: SparkSession, **values) -> DataFrame:
+    """One metrics row as a literal projection over a one-row range —
+    no Python-side rows to serialize, so its write needs no Python
+    worker. Columns absent from `values` stay NULL."""
+    return spark.range(1).select(
+        *[
+            F.lit(values.get(name)).cast(typ).alias(name)
+            for name, typ in (c.split(" ") for c in METRICS_SCHEMA.split(", "))
+        ]
+    )
 
 
 def crawl(
@@ -844,7 +828,12 @@ def crawl(
         else prepare_pages(pages, cfg.n_partitions)
     )
     r = io.latest_round()
-    remaining: int | None = None  # unknown on fresh start/resume
+    # the QUEUED count the last crawl round recorded in its metrics
+    # manifest (a driver-side file read, no job) sizes the first round
+    # of a resume; after init, or after a frontier rewrite without a
+    # metrics row (reseed, recrawl), it is unknown
+    carried = io.table_props("metrics", r)
+    remaining = carried.get("queued_remaining") if carried.get("round") == r else None
     while r < max_rounds:
         r += 1
         remaining = run_round(spark, io, cfg, pages_kv, r, prev_queued=remaining)

@@ -58,14 +58,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(ArrayType(StringType()))
-def extract_links_udf(html: pd.Series, url: pd.Series) -> pd.Series:
-    """Scraper contract (README.md:105-111): absolute defragged outlinks."""
-    return pd.Series(
-        [extract_links(h, u) for h, u in zip(html, url)], dtype="object"
-    )
-
-
-@F.pandas_udf(ArrayType(StringType()))
 def extract_canon_links_udf(html: pd.Series, url: pd.Series) -> pd.Series:
     """extract_links ∘ canonicalize fused in one Arrow stage — the html
     payload crosses into Python once, and the round loop drops a whole

@@ -12,7 +12,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from searchengine_spark.pycore.urltools import EXTENSIONS, canonicalize, url_host
+from searchengine_spark.pycore.urltools import EXTENSIONS, canonicalize
 
 
 @F.pandas_udf(StringType())
@@ -21,35 +21,9 @@ def canonicalize_udf(url: pd.Series) -> pd.Series:
     return url.map(lambda u: canonicalize(u) if u is not None else None)
 
 
-@F.pandas_udf(StringType())
-def host_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: url_host(u) if u is not None else None)
-
-
 def host_col(url: Column) -> Column:
     """Host extraction as a Column expr (parse_url is JVM-side)."""
     return F.lower(F.parse_url(url, F.lit("HOST")))
-
-
-def urlhash64_col(canon_url: Column) -> Column:
-    """64-bit URL key (north rule): Spark xxhash64 — bit-identical to
-    pycore.xxhash64 (verified by tests/test_urltools.py)."""
-    return F.xxhash64(canon_url)
-
-
-def urlhash_sha256_col(url: Column) -> Column:
-    """F7 reference-parity hash: sha256 of
-    "netloc/path/params/query/fragment" — scheme excluded, fragment
-    included (utils/__init__.py:25-30). Semicolon path-params are not
-    exposed by parse_url; the engine's canonical urls never carry them,
-    so '' stands in (parity asserted in tests for param-free urls)."""
-    netloc = F.coalesce(F.parse_url(url, F.lit("HOST")), F.lit(""))
-    path = F.coalesce(F.parse_url(url, F.lit("PATH")), F.lit(""))
-    query = F.coalesce(F.parse_url(url, F.lit("QUERY")), F.lit(""))
-    frag = F.coalesce(F.parse_url(url, F.lit("REF")), F.lit(""))
-    return F.sha2(
-        F.concat_ws("/", netloc, path, F.lit(""), query, frag), 256
-    )
 
 
 # Registrable-domain (pay-level domain) extraction. Real deployments

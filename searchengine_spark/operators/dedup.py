@@ -41,17 +41,6 @@ from searchengine_spark.functions.text import tokens_sql
 _MERSENNE = (1 << 31) - 1
 
 
-def doc_fingerprints(
-    documents: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """(doc_id, fp array<bigint>) — distinct hashes of non-overlapping
-    word n-grams of the normative tokens (A9/A10)."""
-    return documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.expr(fingerprint_sql(tokens_sql(text_col), n)).alias("fp"),
-    )
-
-
 # ------------------------------------------------------------ exact dedup
 
 

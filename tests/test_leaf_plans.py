@@ -1,8 +1,8 @@
 """A/B equivalence of the round's materialization modes: the
-leaf-checkpoint + async-prefetch fast path (CrawlConfig defaults,
-frontier.py _hot/_warm) must produce the identical crawl — same crawl
-order, same URL-seen set, same extracted text — as the legacy persist()
-path. Semantics must not depend on how intermediates are cached."""
+leaf-checkpoint fast path (CrawlConfig default, frontier.py _hot) must
+produce the identical crawl — same crawl order, same URL-seen set, same
+extracted text — as the legacy persist() path. Semantics must not
+depend on how intermediates are cached."""
 
 from __future__ import annotations
 
@@ -38,8 +38,8 @@ def test_leaf_prefetch_path_equals_persist_path(spark, tmp_path):
         # compact mid-run so the fast path crosses a compaction boundary
         compact_every=2,
     )
-    fast = replace(base, leaf_plans_in_round=True, prefetch_in_round=True)
-    legacy = replace(base, leaf_plans_in_round=False, prefetch_in_round=False)
+    fast = replace(base, leaf_plans_in_round=True)
+    legacy = replace(base, leaf_plans_in_round=False)
     got_fast = _run(spark, tmp_path, fast, "fast")
     got_legacy = _run(spark, tmp_path, legacy, "legacy")
     assert got_fast[0] == got_legacy[0]  # crawl order

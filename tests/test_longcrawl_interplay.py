@@ -38,7 +38,6 @@ def _cfg(seeds):
         track_host_graph=True,  # reseed needs the edge log
         compact_every=CADENCE,
         max_per_host_per_round=2,  # slow drain → long crawl
-        light_metrics=True,
     )
 
 

@@ -57,7 +57,6 @@ def run_mode(
         allowed_host_re=ALLOWED_HOST_RE,
         max_per_host_per_round=quota,
         n_partitions=8,
-        light_metrics=True,
         compact_every=compact_every,
         seen_backend="cuckoo" if interleave else "bloom",
         track_host_graph=interleave,
