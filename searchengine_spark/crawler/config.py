@@ -37,9 +37,12 @@ class CrawlConfig:
     # 64k-page/light-body 32-core leg ran 8% faster at 8 partitions
     # than 32); a giant steady-state round keeps full width. Uses the
     # QUEUED count carried from the previous round (an upper bound on
-    # the batch) so sizing costs no extra action (a resume reads it from the
-    # metrics commit manifest); rounds without a carried count (the
-    # first after init) use full n_partitions. The heavy fetch/
+    # the batch) so sizing costs no extra action (a round called without
+    # it reads it from the previous commit's metrics manifest; round 1
+    # gets init's seed count); a round after a frontier rewrite that
+    # left no metrics commit (reseed, recrawl) uses full n_partitions.
+    # Sizing round 1 like the rest also compiles most of the
+    # steady-state plan shapes in round 1 instead of round 2. The heavy fetch/
     # extract stage is unaffected — it inherits the corpus's full-width
     # co-partitioning, not the batch's. 0 disables (always full width).
     rows_per_partition_target: int = 4096

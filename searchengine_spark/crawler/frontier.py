@@ -28,7 +28,8 @@ worker cycle README.md:196-203 lifted to set semantics):
      snapshot per round (ST4: resume = read latest committed round).
      The metrics row is counted by Observations on the frontier and
      fingerprint writes (no job of its own), and its commit manifest
-     carries the QUEUED count that sizes the first round of a resume.
+     carries the QUEUED count that sizes the next round, also across a
+     resume (init_crawl records the seed count for round 1).
 """
 
 from __future__ import annotations
@@ -146,7 +147,10 @@ def init_crawl(
         F.lit(-1).alias("round_fetched"),
         F.lit(None).cast("string").alias("error"),
     )
-    io.stage("frontier", frontier0, 0)
+    obs = Observation()  # the seed count, for round 1's sizing (no job)
+    io.stage(
+        "frontier", frontier0.observe(obs, F.count(F.lit(1)).alias("queued")), 0
+    )
     io.stage("url_seen", _seen_projection(keyed, 0), 0, mode="append")
     io.stage("robots", robots_df, 0)
     io.stage(
@@ -173,7 +177,10 @@ def init_crawl(
             n_files=1,
         )
     io.stage("extracted", spark.createDataFrame([], EXTRACTED_SCHEMA), 0, mode="append")
-    io.stage("metrics", spark.createDataFrame([], METRICS_SCHEMA), 0, mode="append")
+    io.stage(
+        "metrics", spark.createDataFrame([], METRICS_SCHEMA), 0, mode="append",
+        props={"round": 0, "queued_remaining": obs.get["queued"]},
+    )
     io.commit_round(0)
 
 
@@ -217,11 +224,14 @@ def run_round(
     remaining after the round (0 ⇒ crawl complete, ST1 termination).
 
     prev_queued is the QUEUED count before the round (what the previous
-    round returned; None when unknown). It sizes the round's partition
-    width and decides the giant-round prefetch cutoff — both
-    performance only, never results. Each hot intermediate's prefetch
-    is submitted as soon as it is built, so executors work while the
-    driver plans the rest of the round. The metrics row costs no job:
+    round returned). When the caller passes None, the round reads the
+    count the previous commit recorded in its metrics manifest
+    (carried_queued; round 1 gets init_crawl's seed count), so a first
+    round, or the first after a resume, is sized like any other. It
+    sizes the round's partition width and decides the giant-round
+    prefetch cutoff — both performance only, never results. Each hot
+    intermediate's prefetch is submitted as soon as it is built, so
+    executors work while the driver plans the rest of the round. The metrics row costs no job:
     its counts come from Observations on the frontier and fingerprint
     writes, and it is staged as a literal one-row projection.
 
@@ -242,6 +252,8 @@ def run_round(
     repartitions (CrawlConfig.rows_per_partition_target) — the quota
     windows and gate joins shuffle at this width, and with AQE off
     nothing else coalesces a ramp round's near-empty partitions."""
+    if prev_queued is None:
+        prev_queued = carried_queued(io, round_no - 1)
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     shp_prev = spark.conf.get("spark.sql.shuffle.partitions")
     cp_prev = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
@@ -773,8 +785,8 @@ def _run_round_body(
         new_urls=counts["new_urls"],
         queued_remaining=queued_remaining,
     )
-    # the manifest carries the QUEUED count to a resumed crawl (sizing
-    # for its first round — see crawl)
+    # the manifest carries the QUEUED count to a round started without
+    # it, e.g. the first of a resumed crawl (see carried_queued)
     carry = {"round": round_no, "queued_remaining": queued_remaining}
     if do_compact:  # metrics history squashes with the other deltas
         io.stage(
@@ -806,6 +818,15 @@ def _metrics_row(spark: SparkSession, **values) -> DataFrame:
     )
 
 
+def carried_queued(io: TableIO, round_no: int) -> int | None:
+    """The QUEUED count committed round `round_no` recorded in its
+    metrics commit manifest (init_crawl records round 0's seed count) —
+    a driver-side file read, no job. None when that round has no
+    metrics commit of its own (a reseed/recrawl frontier rewrite)."""
+    carried = io.table_props("metrics", round_no)
+    return carried.get("queued_remaining") if carried.get("round") == round_no else None
+
+
 def crawl(
     spark: SparkSession,
     io: TableIO,
@@ -828,12 +849,7 @@ def crawl(
         else prepare_pages(pages, cfg.n_partitions)
     )
     r = io.latest_round()
-    # the QUEUED count the last crawl round recorded in its metrics
-    # manifest (a driver-side file read, no job) sizes the first round
-    # of a resume; after init, or after a frontier rewrite without a
-    # metrics row (reseed, recrawl), it is unknown
-    carried = io.table_props("metrics", r)
-    remaining = carried.get("queued_remaining") if carried.get("round") == r else None
+    remaining = carried_queued(io, r)  # after init, or after a resume
     while r < max_rounds:
         r += 1
         remaining = run_round(spark, io, cfg, pages_kv, r, prev_queued=remaining)

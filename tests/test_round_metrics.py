@@ -7,7 +7,8 @@ everything but before its commit, resumes on a fresh TableIO, and
 checks every committed row against counts recomputed from the
 committed `frontier` and `fingerprints` tables. The resumed round must
 also receive the QUEUED count the last committed round carried in its
-metrics manifest, so it is sized like an uninterrupted round.
+metrics manifest, so it is sized like an uninterrupted round, and
+round 1 the seed count init_crawl recorded.
 """
 
 from __future__ import annotations
@@ -109,10 +110,11 @@ def test_metrics_match_committed_tables_across_kill_and_resume(
         assert {c: metrics[r][c] for c in COUNTS} == expected, r
     assert sum(m["dup_pages"] for m in metrics.values()) > 0  # J7 exercised
 
-    # every round after the first got the previous round's QUEUED count,
-    # the resumed one through the metrics manifest of the last commit
+    # every round got the previous round's QUEUED count: round 1 init's
+    # seed count, the resumed one through the metrics manifest of the
+    # last commit
     resumed = calls[n_before_resume]
     assert resumed == (KILLED_ROUND, metrics[KILLED_ROUND - 1]["queued_remaining"])
-    assert calls[0] == (1, None)
+    assert calls[0] == (1, len(cfg.seeds))
     for r, prev in calls[1:]:
         assert prev == metrics[r - 1]["queued_remaining"], (r, prev)
